@@ -176,9 +176,11 @@ object Bench {
       }
       case i => txt.indexOf('{', i)
     }
-    if (start < 0) Map.empty
+    // a truncated artifact has no closing brace: no map, not a crash
+    val end = if (start < 0) -1 else txt.indexOf('}', start)
+    if (end < 0) Map.empty
     else "\"([^\"]+?)\\\\?\":(-?[0-9]+\\.?[0-9]*)".r
-      .findAllMatchIn(txt.substring(start, txt.indexOf('}', start)))
+      .findAllMatchIn(txt.substring(start, end))
       .map(m => m.group(1).stripSuffix("\\") -> m.group(2).toDouble)
       .toMap
   }

@@ -632,7 +632,7 @@ object Analytics {
     val pi0 = states.crossJoin(broadcast(k))
       .select(col("state"),
         dec(round(lit(1.0) / col("__k").cast("double"), 6)).as("__pi"))
-    val piN = (1 to iters).foldLeft(pi0) { (pi, _) =>
+    val piN = Iterate.loop(pi0, iters, Iterate.Pin.Never) { (_, pi) =>
       p.join(broadcast(pi), p("__src") === pi("state"))
         .groupBy(col("__dst"))
         .agg(dec(sum(dec(round(col("__pi") * col("__p"), 6)))).as("__pi"))
@@ -1194,27 +1194,25 @@ object Analytics {
       when(sumPico > 0, (round((pm.cast("double") / lit(1e6)) /
         (sumPico.cast("double") / lit(1e12)), 6)
         .cast("decimal(18,6)") * 1000000L).cast(dec).cast("long"))
-    var v = mass.select(col("__bin").as("__j"),
+    def uFrom(v: DataFrame): DataFrame = kmat.join(v, Seq("__j"))
+      .groupBy(col("__i"))
+      .agg(sum(col("__km").cast(dec) * col("__vm")).as("__kv"))
+      .join(mass.select(col("__bin").as("__i"), col("__pm")), Seq("__i"))
+      .select(col("__i"), scale(col("__pm"), col("__kv")).as("__um"))
+    def vFrom(u: DataFrame): DataFrame = kmat.join(u, Seq("__i"))
+      .groupBy(col("__j"))
+      .agg(sum(col("__km").cast(dec) * col("__um")).as("__ku"))
+      .join(mass.select(col("__bin").as("__j"), col("__qm")), Seq("__j"))
+      .select(col("__j"), scale(col("__qm"), col("__ku")).as("__vm"))
+    val v0 = mass.select(col("__bin").as("__j"),
       when(col("__qm").isNotNull, lit(1000000L)).as("__vm"))
       .localCheckpoint()
-    var u = v.limit(0).select(col("__j").as("__i"),
-      col("__vm").as("__um"))
-    for (_ <- 1 to iters) {
-      u = kmat.join(v, Seq("__j"))
-        .groupBy(col("__i"))
-        .agg(sum(col("__km").cast(dec) * col("__vm")).as("__kv"))
-        .join(mass.select(col("__bin").as("__i"), col("__pm")),
-          Seq("__i"))
-        .select(col("__i"), scale(col("__pm"), col("__kv")).as("__um"))
-        .localCheckpoint()
-      v = kmat.join(u, Seq("__i"))
-        .groupBy(col("__j"))
-        .agg(sum(col("__km").cast(dec) * col("__um")).as("__ku"))
-        .join(mass.select(col("__bin").as("__j"), col("__qm")),
-          Seq("__j"))
-        .select(col("__j"), scale(col("__qm"), col("__ku")).as("__vm"))
-        .localCheckpoint()
+    // the loop carries u; each round's v is scratch between two u's,
+    // and the last v is rebuilt from the last u — every scaling pinned
+    val u = Iterate.loop(uFrom(v0), iters - 1, Iterate.Pin.All) {
+      (r, u) => uFrom(r.pin(vFrom(u)))
     }
+    val v = vFrom(u).localCheckpoint()
     val plan = kmat.join(u, Seq("__i")).join(v, Seq("__j"))
       .agg(sum(col("__um").cast(dec) * col("__km") * col("__vm") *
         col("__c")).as("__cost18"),
@@ -1586,7 +1584,7 @@ object Analytics {
         sum(col("__nij")).cast("long").as("games"))
       .localCheckpoint()
     val p0 = totals.select(col("__i"), lit(1.0).as("__p"))
-    val pFinal = (1 to iters).foldLeft(p0) { (p, _) =>
+    val pFinal = Iterate.loop(p0, iters, Iterate.Pin.Rounds) { (_, p) =>
       val term = sym
         .join(broadcast(p.select(col("__i"), col("__p").as("__pi"))),
           Seq("__i"))
@@ -1597,21 +1595,12 @@ object Analytics {
             (col("__pi") + col("__pj")), 6)
             .cast("decimal(28,6)").as("__t"))
         .groupBy(col("__i")).agg(sum(col("__t")).as("__den"))
-      val next = term
+      term
         .join(broadcast(totals.select(col("__i"), col("wins"))),
           Seq("__i"))
         .select(col("__i"),
           round(col("wins").cast("double") /
             col("__den").cast("double"), 6).as("__p"))
-        .localCheckpoint()
-      // superseded round state: Dataset.unpersist only walks the
-      // CacheManager, which never registered a localCheckpoint's
-      // internal RDD — so this is a no-op and the superseded blocks
-      // are reclaimed LAZILY by the ContextCleaner once the RDD is
-      // unreachable (ADVICE r20). Fine at iters=3 dimension scale;
-      // eager release would need a handle to the checkpointed RDD.
-      p.unpersist(blocking = false)
-      next
     }
     // share denominator: round-6 doubles cast to decimal(18,6) are
     // exact, so the players-frame sum is order-invariant
@@ -1748,14 +1737,14 @@ object Analytics {
     require(maxJ <= 64,
       s"an item carries $maxJ judgments: the staged exact E-step " +
         "product bounds judgments per item at 64")
-    var post = perItem.crossJoin(broadcast(classDim))
+    val post0 = perItem.crossJoin(broadcast(classDim))
       .join(votes, Seq("__i", "__c"), "left")
       .select(col("__i"), col("__c"),
         microR6(coalesce(col("__v"), lit(0L)).cast("double") /
           col("__a").cast("double")).as("__post"))
     var pi: DataFrame = null
     var priors: DataFrame = null
-    for (round <- 1 to rounds) {
+    val post = Iterate.loop(post0, rounds, Iterate.Pin.Rounds) { (r, post) =>
       // M-step on the full (k, c, l) grid: absent cells still get
       // their Laplace mass, so the π frame is always A·C·L rows
       // cast INSIDE the sum: a long sum wraps silently at corpus
@@ -1774,7 +1763,7 @@ object Analytics {
       // once per round, by the E-step's broadcast, so laziness costs
       // no recompute. Only the FINAL round's π/priors are
       // checkpointed (below) — they are returned, and must stay
-      // executable after `labels` is unpersisted.
+      // executable after the loop releases the posteriors they read.
       // __st (the per-(k, c) row total) is a WINDOW sum over the
       // grid-joined frame instead of a second agg + join (r21 opt,
       // guide §2.4 — the M-step fusion): the grid carries EVERY
@@ -1796,7 +1785,7 @@ object Analytics {
             (col("__st")
               + lit(1000000L) * lit(lCount)).cast("double"))
             .as("__pi"))
-      if (round == rounds) pi = pi.localCheckpoint()
+      if (r.index == rounds) pi = pi.localCheckpoint()
       val pcls = post.groupBy(col("__c"))
         .agg(sum(col("__post").cast("decimal(20,0)"))
           .cast("decimal(20,0)").as("__pc"))
@@ -1808,7 +1797,7 @@ object Analytics {
             (col("__pc") + lit(1000000L)).cast("double") /
             (col("__pt") + lit(1000000L) * lit(lCount)).cast("double"))
             .as("__prior"))
-      if (round == rounds) priors = priors.localCheckpoint()
+      if (r.index == rounds) priors = priors.localCheckpoint()
       // E-step: every (i, k) judgment fans out to all C classes via
       // the broadcast π grid; the per-(i, c) likelihood is the exact
       // integer product of its ≤ maxJ π factors times the prior.
@@ -1904,22 +1893,11 @@ object Analytics {
             .withColumn("__d",
               sum(col("__n")).over(wDen).cast("decimal(38,0)"))
         }
-      val prev = post
-      post = normalized
+      normalized
         .select(col("__i"), col("__c"),
           microR6(col("__n").cast("double") / col("__d").cast("double"))
             .as("__post"))
-        .localCheckpoint()
-      // superseded round state off the block manager eagerly (the
-      // learnBpeMerges swap discipline — orphaned checkpoint blocks
-      // pin executor memory for the rest of the session). The FINAL
-      // round's posteriors are the returned result and stay.
-      // non-blocking (r20 opt): the swap only needs the blocks GONE
-      // eventually — the old blocking=true waited a full driver
-      // round-trip per round for memory this bounded run never misses
-      if (prev ne null) prev.unpersist(blocking = false)
     }
-    labels.unpersist(blocking = false)
     (post, pi, priors)
   }
 

@@ -96,22 +96,17 @@ object Graphs {
             rounds: Int = 8): DataFrame = {
     require(k >= 1, "k must be >= 1")
     require(rounds >= 1, "rounds must be >= 1")
-    var e = canonicalEdges(edges, aCol, bCol).localCheckpoint()
-    var converged = false
-    var i = 0
-    while (!converged && i < rounds) {
+    val core = Iterate.loop(canonicalEdges(edges, aCol, bCol), rounds,
+        Iterate.Pin.All) { (_, e) =>
       val deg = e.select(explode(array(col("u"), col("v"))).as("n"))
         .groupBy(col("n")).agg(count(lit(1)).as("deg"))
       val bad = deg.filter(col("deg") < k).select(col("n"))
-      if (bad.limit(1).count() == 0) converged = true
-      else {
-        e = e.join(bad.select(col("n").as("u")), Seq("u"), "left_anti")
-          .join(bad.select(col("n").as("v")), Seq("v"), "left_anti")
-          .select(col("u"), col("v")).localCheckpoint()
-        i += 1
-      }
+      if (bad.limit(1).count() == 0) e
+      else e.join(bad.select(col("n").as("u")), Seq("u"), "left_anti")
+        .join(bad.select(col("n").as("v")), Seq("v"), "left_anti")
+        .select(col("u"), col("v"))
     }
-    e.select(explode(array(col("u"), col("v"))).as("node"))
+    core.select(explode(array(col("u"), col("v"))).as("node"))
       .groupBy(col("node"))
       .agg(count(lit(1)).cast("long").as("core_degree"))
   }
@@ -141,33 +136,27 @@ object Graphs {
   def labelPropagation(edges: DataFrame, aCol: String, bCol: String,
                        rounds: Int = 4): DataFrame = {
     require(rounds >= 1, "rounds must be >= 1")
-    val e = canonicalEdges(edges, aCol, bCol).localCheckpoint()
-    val adj = e.select(col("u").as("__n"), col("v").as("__m"))
-      .union(e.select(col("v").as("__n"), col("u").as("__m")))
-    var lab = e.select(explode(array(col("u"), col("v"))).as("node"))
-      .distinct().select(col("node"), col("node").as("label"))
-      .localCheckpoint()
-    var converged = false
-    var i = 0
-    while (!converged && i < rounds) {
-      val nb = adj.join(
-        lab.select(col("node").as("__m"), col("label")), Seq("__m"))
-      val cnt = nb.groupBy(col("__n"), col("label"))
-        .agg(count(lit(1)).as("__c"))
-      val w = Window.partitionBy(col("__n"))
-        .orderBy(col("__c").desc, col("label"))
-      val next = cnt.withColumn("__r", row_number().over(w))
-        .filter(col("__r") === 1)
-        .select(col("__n").as("node"), col("label"))
-        .localCheckpoint()
-      val changed = next.join(lab.withColumnRenamed("label", "__old"),
-          Seq("node"))
-        .filter(col("label") =!= col("__old")).limit(1).count()
-      lab = next
-      if (changed == 0) converged = true
-      i += 1
+    Iterate.withPinned(canonicalEdges(edges, aCol, bCol)) { e =>
+      val adj = e.select(col("u").as("__n"), col("v").as("__m"))
+        .union(e.select(col("v").as("__n"), col("u").as("__m")))
+      val lab0 = e.select(explode(array(col("u"), col("v"))).as("node"))
+        .distinct().select(col("node"), col("node").as("label"))
+      // a fixpoint: no node changed its label this round
+      def settled(lab: DataFrame, next: DataFrame): Boolean =
+        next.join(lab.withColumnRenamed("label", "__old"), Seq("node"))
+          .filter(col("label") =!= col("__old")).limit(1).count() == 0
+      Iterate.loop(lab0, rounds, Iterate.Pin.All, settled) { (_, lab) =>
+        val nb = adj.join(
+          lab.select(col("node").as("__m"), col("label")), Seq("__m"))
+        val cnt = nb.groupBy(col("__n"), col("label"))
+          .agg(count(lit(1)).as("__c"))
+        val w = Window.partitionBy(col("__n"))
+          .orderBy(col("__c").desc, col("label"))
+        cnt.withColumn("__r", row_number().over(w))
+          .filter(col("__r") === 1)
+          .select(col("__n").as("node"), col("label"))
+      }.select(col("node"), col("label").as("community"))
     }
-    lab.select(col("node"), col("label").as("community"))
   }
 
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
@@ -194,7 +183,7 @@ object Graphs {
     val r0 = nodes.crossJoin(broadcast(nAgg))
       .select(col("node"),
         dec(round(lit(1.0) / col("__n").cast("double"), 6)).as("__r"))
-    val rN = (1 to iters).foldLeft(r0) { (r, _) =>
+    val rN = Iterate.loop(r0, iters, Iterate.Pin.Never) { (_, r) =>
       val dangling = r.join(srcs, Seq("node"), "left_anti")
         .agg(coalesce(sum(col("__r")), lit(0).cast("decimal(18,6)"))
           .as("__dang"))
@@ -234,8 +223,9 @@ object Graphs {
     *
     * Scale shape: identical to [[pageRank]] — per-round one
     * edge-frame join + dst-keyed agg; the seed frame joins once as a
-    * node-frame column. Bounded rounds, lineage cut per round by
-    * the unrolled fold.
+    * node-frame column. Bounded rounds and nothing pinned: the
+    * `iters` rounds stay ONE lazy plan, so a large `iters` grows the
+    * plan (and its planning time) with every round.
     *
     * @return (node, ppr) for every graph node */
   def personalizedPageRank(edges: DataFrame, srcCol: String,
@@ -272,7 +262,7 @@ object Graphs {
           dec(round(lit(1.0) / col("__ns").cast("double"), 6)))
           .otherwise(dec(lit(0))).as("__s"))
     val r0 = sF.select(col("node"), col("__s").as("__r"))
-    val rN = (1 to iters).foldLeft(r0) { (r, _) =>
+    val rN = Iterate.loop(r0, iters, Iterate.Pin.Never) { (_, r) =>
       val dangling = r.join(srcs, Seq("node"), "left_anti")
         .agg(coalesce(sum(col("__r")), lit(0).cast("decimal(18,6)"))
           .as("__dang"))

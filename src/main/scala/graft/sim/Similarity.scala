@@ -1,5 +1,8 @@
 package graft.sim
 
+import scala.collection.mutable.ArrayBuffer
+
+import graft.ops.Iterate
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -390,19 +393,20 @@ object Similarity {
     val all =
       if (k == 1) first
       else {
+        val picks = ArrayBuffer(first)
         val d0 = kCenterAdvance(
           pts.withColumn("__dm", lit(null).cast("double")), first)
-          .localCheckpoint()
-        (2 to k).foldLeft((first, d0)) { case ((sel, dmin), i) =>
+        Iterate.loop(d0, k - 1, Iterate.Pin.All) { (r, dmin) =>
           val next = dmin.orderBy(col("__dm").desc, col("__id")).limit(1)
-            .select(lit(i).as("rank"), col("__id"), col("__v"),
+            .select(lit(r.index + 1).as("rank"), col("__id"), col("__v"),
               col("__dm").as("maximin"))
             .localCheckpoint()
-          // the last round's state has no consumer — skip its update
-          (sel.unionByName(next),
-            if (i == k) dmin
-            else kCenterAdvance(dmin, next).localCheckpoint())
-        }._1
+          picks += next
+          // the last pick needs no state update: returning the state
+          // unchanged ends the loop without another pass
+          if (r.index + 1 == k) dmin else kCenterAdvance(dmin, next)
+        }
+        picks.reduce(_ unionByName _)
       }
     all.select(col("rank"), col("__id").as(idCol), col("maximin"))
   }
@@ -471,7 +475,7 @@ object Similarity {
     val first = rel.orderBy(col("__rel").desc, col("__id")).limit(1)
       .select(lit(1).as("rank"), col("__id"), col("__rel"),
         round(lam * col("__rel"), 6).as("__score"))
-    val all = (2 to k).foldLeft(first) { (sel, i) =>
+    val all = Iterate.loop(first, k - 1, Iterate.Pin.Rounds) { (r, sel) =>
       val remaining = rel.join(sel.select(col("__id")), Seq("__id"),
         "left_anti")
       val red = remaining
@@ -485,9 +489,9 @@ object Similarity {
           round(lam * col("__rel") -
             (lit(1.0) - lam) * col("__red"), 6).as("__score"))
         .orderBy(col("__score").desc, col("__id")).limit(1)
-        .select(lit(i).as("rank"), col("__id"), col("__rel"),
+        .select(lit(r.index + 1).as("rank"), col("__id"), col("__rel"),
           col("__score"))
-      sel.unionByName(next).localCheckpoint()
+      sel.unionByName(next)
     }
     all.select(col("rank"), col("__id").as(idCol),
       col("__rel").as("relevance"), col("__score").as("mmr_score"))

@@ -1,5 +1,6 @@
 package graft.text
 
+import graft.ops.Iterate
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -563,65 +564,60 @@ object Dedup {
   def duplicateClusters(pairs: DataFrame, maxIters: Int = 20): DataFrame = {
     // materialize the (possibly expensive) pair generation ONCE — edges,
     // the label seed, and every propagation round all read it
-    val p = pairs.select(col("id1"), col("id2")).localCheckpoint()
-    val edges = p.union(p.select(col("id2").as("id1"), col("id1").as("id2")))
-    var labels = p.select(col("id1").as("id"))
-      .union(p.select(col("id2").as("id")))
-      .distinct()
-      .withColumn("cluster_id", col("id"))
-      .localCheckpoint()
-    var converged = false
-    var i = 0
-    val idType = labels.schema("cluster_id").dataType
-    while (!converged && i < maxIters) {
-      val viaEdges = edges
-        .join(labels.withColumnRenamed("id", "id2"), Seq("id2"))
-        .select(col("id1").as("id"), col("cluster_id"),
-          lit(null).cast(idType).as("__prev"))
-      // the round CARRIES each id's previous label beside the new one
-      // (max ignores the edge rows' null __prev; every id has exactly
-      // one labels row, so __prev is its old label) — the convergence
-      // test below is then a filter over the already-checkpointed
-      // round result instead of a join+shuffle back against `labels`
-      // (r21 opt, guide §2.4: one exchange pair less per round)
-      // checkpoint: hop is read twice below (as itself and as the
-      // parent map) — without it the join+agg subplan would run twice
-      val hop = labels
-        .select(col("id"), col("cluster_id"),
-          col("cluster_id").as("__prev"))
-        .unionByName(viaEdges)
-        .groupBy(col("id"))
-        .agg(min(col("cluster_id")).as("cluster_id"),
-          max(col("__prev")).as("__prev"))
-        .localCheckpoint()
-      // pointer jump: adopt the label OF my label (always present —
-      // labels are ids of the same table; left join defends anyway)
-      val parents = hop.select(col("id").as("cluster_id"),
-        col("cluster_id").as("__parent"))
-      val next = hop.join(parents, Seq("cluster_id"), "left")
-        .select(col("id"),
-          least(col("cluster_id"),
-            coalesce(col("__parent"), col("cluster_id"))).as("cluster_id"),
-          col("__prev"))
-        .localCheckpoint()
-      // scan of the just-checkpointed blocks — no join, no shuffle
-      val changed = next.filter(!(col("cluster_id") <=> col("__prev")))
-        .count()
-      // superseded checkpoint blocks are reclaimed lazily by the
-      // ContextCleaner once the RDDs are unreachable (Dataset.unpersist
-      // only walks the CacheManager and never sees them — ADVICE r20);
-      // `next` is itself checkpointed, so nothing re-reads them
-      labels = next.drop("__prev")
-      converged = changed == 0
-      i += 1
+    Iterate.withPinned(pairs.select(col("id1"), col("id2"))) { p =>
+      val edges =
+        p.union(p.select(col("id2").as("id1"), col("id1").as("id2")))
+      val labels0 = p.select(col("id1").as("id"))
+        .union(p.select(col("id2").as("id")))
+        .distinct()
+        .withColumn("cluster_id", col("id"))
+      val idType = labels0.schema("cluster_id").dataType
+      var converged = false
+      // scan of the just-pinned round state — no join, no shuffle
+      def settled(prev: DataFrame, next: DataFrame): Boolean = {
+        converged =
+          next.filter(!(col("cluster_id") <=> col("__prev"))).count() == 0
+        converged
+      }
+      val labels = Iterate.loop(labels0, maxIters, Iterate.Pin.All,
+          settled) { (r, labels) =>
+        val viaEdges = edges
+          .join(labels.select(col("id").as("id2"), col("cluster_id")),
+            Seq("id2"))
+          .select(col("id1").as("id"), col("cluster_id"),
+            lit(null).cast(idType).as("__prev"))
+        // the round CARRIES each id's previous label beside the new one,
+        // so the convergence test is a filter over the pinned round
+        // result instead of a join+shuffle back against `labels` (r21
+        // opt, guide §2.4: one exchange pair less per round). Pinned:
+        // hop is read twice below (as itself and as the parent map) —
+        // unpinned, the join+agg subplan would run twice
+        val hop = r.pin(labels
+          .select(col("id"), col("cluster_id"),
+            col("cluster_id").as("__prev"))
+          .unionByName(viaEdges)
+          .groupBy(col("id"))
+          .agg(min(col("cluster_id")).as("cluster_id"),
+            // the old label only if EVERY edge endpoint has a labels
+            // row: labels0 seeds one per endpoint of `p`, each round
+            // keeps one per id; an endpoint without one would carry a
+            // null __prev and `settled` would never hold
+            max(col("__prev")).as("__prev")))
+        // pointer jump: adopt the label OF my label (always present —
+        // labels are ids of the same table; left join defends anyway)
+        val parents = hop.select(col("id").as("cluster_id"),
+          col("cluster_id").as("__parent"))
+        hop.join(parents, Seq("cluster_id"), "left")
+          .select(col("id"),
+            least(col("cluster_id"),
+              coalesce(col("__parent"), col("cluster_id"))).as("cluster_id"),
+            col("__prev"))
+      }
+      if (!converged) throw new IllegalStateException(
+        s"duplicateClusters did not converge in $maxIters rounds — " +
+          "component diameter exceeds 2^maxIters? raise maxIters")
+      labels.drop("__prev")
     }
-    // the edge seed is only read by the rounds above; the returned
-    // labels table is checkpointed and self-contained
-    p.unpersist(blocking = false)
-    if (!converged) throw new IllegalStateException(
-      s"duplicateClusters did not converge in $maxIters rounds — " +
-        "component diameter exceeds 2^maxIters? raise maxIters")
-    labels
   }
 
   /** EXACT all-pairs n-gram Jaccard similarity join via prefix

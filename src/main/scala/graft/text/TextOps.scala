@@ -1,5 +1,6 @@
 package graft.text
 
+import graft.ops.Iterate
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -1202,9 +1203,9 @@ object TextOps {
     * decision is corpus-global by definition — the paper's algorithm
     * is inherently iterative, `numMerges` bounded jobs, not a
     * per-round unbounded loop). The rewrite is a narrow codegen'd
-    * fold (`aggregate` HOF) — no shuffle. Sequences are cached
-    * between rounds ([[org.apache.spark.sql.Dataset.localCheckpoint]]
-    * cuts the k-deep lineage so round k doesn't replay rounds 1..k−1).
+    * fold (`aggregate` HOF) — no shuffle. Sequences are pinned
+    * between rounds ([[graft.ops.Iterate]]: the pin cuts the k-deep
+    * lineage so round k doesn't replay rounds 1..k−1).
     */
   def learnBpeMerges(docs: org.apache.spark.sql.DataFrame, idCol: String,
                      textCol: String, numMerges: Int)
@@ -1212,7 +1213,7 @@ object TextOps {
     require(numMerges >= 1 && numMerges <= 64, "numMerges in [1,64]")
     val spark = docs.sparkSession
     import org.apache.spark.sql.Row
-    // the checkpointed sequences are the ITERATION STATE, re-scanned
+    // the pinned sequences are the ITERATION STATE, re-scanned
     // 2× per round (pair agg + fuse rewrite) for up to 64 rounds —
     // partition them to cluster width up front, not to the input's
     // file/row-group count (a single-row-group table would otherwise
@@ -1224,19 +1225,13 @@ object TextOps {
     val width = scala.util.Try(
       spark.conf.get("spark.sql.shuffle.partitions").toInt)
       .getOrElse(spark.sparkContext.defaultParallelism)
-    var seqs = docs.select(col(idCol).as("id"),
+    val seqs0 = docs.select(col(idCol).as("id"),
       tokens(lower(col(textCol))).as("w"))
-      .repartition(width).localCheckpoint()
-    // each round's checkpoint supersedes the last: unpersist the prior
-    // one eagerly, and the final one before returning — checkpointed
-    // blocks otherwise pin executor memory for the rest of the session
-    // (measured: a later unrelated bench query slowed 4x)
-    def swap(next: org.apache.spark.sql.DataFrame)
-        : org.apache.spark.sql.DataFrame = {
-      seqs.unpersist(blocking = true); next
-    }
+      .repartition(width)
     val learned = scala.collection.mutable.ArrayBuffer.empty[Row]
-    for (rank <- 1 to numMerges) {
+    // a round that finds no pair leaves the sequences unchanged: every
+    // later round would find none either, so the loop stops there
+    Iterate.loop(seqs0, numMerges, Iterate.Pin.All) { (merge, seqs) =>
       // docs under 2 symbols have no adjacent pair — and MUST be
       // filtered before the sequence: sequence(1, 0) DESCENDS in
       // Spark, yielding spurious (null, null) pairs that sort FIRST
@@ -1262,10 +1257,11 @@ object TextOps {
       val top = pairs
         .orderBy(col("n").desc, col("l"), col("r"))
         .limit(1).collect()
-      if (top.nonEmpty) {
+      if (top.isEmpty) seqs
+      else {
         val (l, r, n) = (top(0).getString(0), top(0).getString(1),
           top(0).getLong(2))
-        learned += Row(rank, l, r, n)
+        learned += Row(merge.index, l, r, n)
         // greedy non-overlapping left-to-right fuse of (l, r): one
         // compiled pass per sequence (NativeExpressions.BpeFuse — the
         // aggregate-HOF fold it replaces is interpreted per element
@@ -1274,13 +1270,11 @@ object TextOps {
         // is the pair joined with a space (never a whitespace token),
         // so a just-fused atom only re-fuses when a LATER round
         // learns that pair — exactly the BPE greedy application order.
-        val seqs2 = seqs.select(col("id"),
+        seqs.select(col("id"),
           graft.functions.NativeExpressions.bpe_fuse(col("w"), l, r)
-            .as("w")).localCheckpoint()
-        seqs = swap(seqs2)
+            .as("w"))
       }
     }
-    seqs.unpersist(blocking = true)
     spark.createDataFrame(
       spark.sparkContext.parallelize(learned.toSeq, 1),
       org.apache.spark.sql.types.StructType.fromDDL(
@@ -1456,10 +1450,10 @@ object TextOps {
       .localCheckpoint()
     val nNodes = edges.select(col("src")).distinct().count()
     val base = (1.0 - damping) / nNodes // IEEE double, oracle mirrors
-    var ranks = edges.select(col("src").as("term")).distinct()
+    val ranks0 = edges.select(col("src").as("term")).distinct()
       .withColumn("r", lit(1.0 / nNodes))
-    for (_ <- 1 to iters) {
-      ranks = edges.join(ranks, edges("src") === ranks("term"))
+    val ranks = Iterate.loop(ranks0, iters, Iterate.Pin.Never) { (_, ranks) =>
+      edges.join(ranks, edges("src") === ranks("term"))
         .select(col("dst"),
           round(col("n") / col("ow") * col("r"), 12).as("__c"))
         .groupBy(col("dst")).agg(

@@ -324,8 +324,8 @@ object ScaleSweep {
           "c_custkey", "c_name", k = 1, maxBucket = Some(20000)).count()
       },
       // iterative: numMerges bounded jobs, each one explode + hash agg
-      // + 1-row argmax + HOF fuse with per-round localCheckpoint and
-      // blocking unpersist — per-round cost should track corpus size
+      // + 1-row argmax + fuse into a pinned round state (Iterate) —
+      // per-round cost should track corpus size
       "t_bpe_merges" -> (d =>
         SparkEntry.queries("t_bpe_merges")(spark, d).count()),
       // the coverage anti-join shape (grams -> window counts -> gaps-

@@ -145,6 +145,8 @@ class BenchSpec extends SparkSpec {
     // no queries map at all -> empty, never a crash
     assert(Bench.parsePrevQueries("nothing to see").isEmpty)
     assert(Bench.parsePrevQueries("").isEmpty)
+    // a truncated artifact (map never closed) -> empty, never a crash
+    assert(Bench.parsePrevQueries(""""queries":{"a":1.0""").isEmpty)
   }
 
   test("plateauQuiet: returns at once on a quiet box, retries under " +
